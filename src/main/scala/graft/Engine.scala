@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Session factory + table registry for the graft engine.
   *
@@ -113,6 +116,20 @@ object Engine {
       // (q06 @sf1: ~600 ms -> ~140 ms). The engine never uses session
       // artifacts (addArtifact), so isolation buys nothing here.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Generated-class cache sized to the query catalog's working set.
+      // Spark's default holds 100 classes, but one TPC-H pass generates
+      // ~350 distinct ones at sf0.001 and ~440 at sf0.1, and one TPC-DS
+      // pass ~2,600. Under the default each class was evicted before its
+      // next use, so every sf0.1 TPC-H pass ran ~430 Janino compiles
+      // (~5 s of a ~24 s pass) and then ran the fresh classes JIT-cold,
+      // the same cost the artifact-isolation note above measured. 8192
+      // holds a TPC-H and a TPC-DS pass together, with headroom. An entry
+      // costs ~12 KB of metaspace (measured over a TPC-DS pass), so a full
+      // cache is ~100 MB, and a workload pays only for the classes it
+      // generates.
+      // Static conf, read once per JVM by the first query that generates
+      // code: it takes effect only if that query's session was built here.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       // Report bucketed scans' write-time sort order (Spark gates this
       // behind a legacy flag; it only ever applies when each bucket is a
       // single file, which the staged writers guarantee by repartitioning
@@ -136,16 +153,53 @@ object Engine {
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings")
 
-  /** Schema catalog: parquet schema per fixture file, validated by
-    * (mtime, size). `spark.read.parquet` infers the schema EAGERLY from the
-    * footer on every call — ~100 ms of per-table, per-session overhead that
-    * a production engine never pays because its catalog stores the schema.
-    * One stat() call replaces the footer read; a rewritten file (different
-    * mtime/size) re-infers, so non-fixture uses stay correct.
+  /** Stat-based identity of a fixture path: (path, mtime, size) for a
+    * file, (path, mtime, children's signature) for a flat directory. None
+    * when stat() cannot vouch for the contents: a missing path, or a
+    * nested/partitioned layout, which can be rewritten in place without
+    * changing the subdirectories' own length/mtime. */
+  private def fileKey(path: String): Option[(String, Long, Long)] = {
+    val f = new java.io.File(path)
+    if (f.isFile) Some((path, f.lastModified(), f.length()))
+    else if (f.isDirectory) {
+      // directory outputs (multi-file tables, e.g. ScaleGen's): the
+      // children's aggregate (size, mtime)
+      val parts = f.listFiles()
+      if (parts != null && parts.forall(_.isFile)) {
+        val sig = parts.foldLeft(0L)((a, p) =>
+          a ^ java.lang.Long.rotateLeft(p.length() + p.lastModified(), 17))
+        Some((path, f.lastModified(), sig))
+      } else None
+    } else None
+  }
+
+  /** Schema catalog: parquet schema per [[fileKey]].
+    * `spark.read.parquet` infers the schema EAGERLY from the footer on
+    * every call — ~100 ms of per-table, per-session overhead (~70 ms/table
+    * for ScaleGen's directories at sf1) that a production engine never pays
+    * because its catalog stores the schema. One stat() call replaces the
+    * footer read; a rewritten file (different key) re-infers, so non-fixture
+    * uses stay correct.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
       org.apache.spark.sql.types.StructType]()
+
+  /** Relation catalog: the temp views [[table]] registered, each with the
+    * [[fileKey]] it was read at. The view's plan holds the resolved file
+    * relation; resolving one (path checks, file listing) and registering
+    * its view cost ~8 ms per table per query, which a view still current
+    * skips.
+    *
+    * Weak keys compared by identity: the view lives in its session's
+    * catalog, so an entry lasts as long as the session keeps that view,
+    * and the key tuple holds nothing that could keep either alive.
+    */
+  private val registered: java.util.concurrent.ConcurrentMap[AnyRef, (String, Long, Long)] =
+    new com.google.common.collect.MapMaker().weakKeys().makeMap()
+
+  private def relationOf(view: TemporaryViewRelation): Option[BaseRelation] =
+    view.plan.flatMap(_.collectFirst { case l: LogicalRelation => l.relation })
 
   /** Per-session query-plan extensions, installed idempotently on first
     * fixture-table access: the Decimal64-style exact-sum fast path
@@ -172,36 +226,48 @@ object Engine {
         opts2 :+ graft.plans.PruneWeakBloom
   }
 
-  /** Read one driver fixture table and register it as a temp view. */
+  /** Read one driver fixture table and register it as a temp view.
+    *
+    * Once per session and file version: while the session's view `name`
+    * is still the one this registered for the same [[fileKey]], the call
+    * returns a fresh DataFrame (fresh attribute ids, so self-joins
+    * resolve) over the already-resolved relation and leaves the view as
+    * it is. A rewritten file, a view replaced by anyone else, or another
+    * session reads and registers again.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureOptimizations(spark)
     val path = s"$dir/$name.parquet"
-    val f = new java.io.File(path)
-    val df =
-      if (f.isFile) {
-        val key = (path, f.lastModified(), f.length())
-        val schema = schemaCache.computeIfAbsent(key,
-          _ => spark.read.parquet(path).schema)
-        spark.read.schema(schema).parquet(path)
-      } else if (f.isDirectory) {
-        // directory outputs (multi-file tables, e.g. ScaleGen's): validate
-        // by the children's aggregate (size, mtime) — without this, every
-        // query re-reads footers for every table (~70 ms/table at sf1).
-        // Flat (all-regular-file) directories only: a nested/partitioned
-        // layout can be rewritten in place without changing the
-        // subdirectories' own length/mtime, which would serve a stale schema.
-        val parts = f.listFiles()
-        if (parts.forall(_.isFile)) {
-          val sig = parts.foldLeft(0L)((a, p) =>
-            a ^ java.lang.Long.rotateLeft(p.length() + p.lastModified(), 17))
-          val key = (path, f.lastModified(), sig)
+    fileKey(path) match {
+      case None =>
+        val df = spark.read.parquet(path)
+        df.createOrReplaceTempView(name)
+        df
+      case Some(key) =>
+        val catalog = spark.sessionState.catalog
+        val current = catalog.getRawTempView(name)
+          .filter(view => registered.get(view) == key)
+          .flatMap(relationOf)
+          // a cloned session (streaming runs in one) starts with its
+          // parent's views, whose relation reads through the parent
+          .filter(_.sqlContext eq spark.sqlContext)
+        current.map(spark.baseRelationToDataFrame).getOrElse {
           val schema = schemaCache.computeIfAbsent(key,
             _ => spark.read.parquet(path).schema)
-          spark.read.schema(schema).parquet(path)
-        } else spark.read.parquet(path)
-      } else spark.read.parquet(path)
-    df.createOrReplaceTempView(name)
-    df
+          val df = spark.read.schema(schema).parquet(path)
+          df.createOrReplaceTempView(name)
+          val read = df.queryExecution.analyzed match {
+            case l: LogicalRelation => Some(l.relation)
+            case _ => None
+          }
+          // record the view only while it still holds this read: another
+          // thread may have replaced it since
+          catalog.getRawTempView(name)
+            .filter(view => relationOf(view).exists(r => read.exists(_ eq r)))
+            .foreach(registered.put(_, key))
+          df
+        }
+    }
   }
 
   /** Register every fixture table as a temp view (for spark.sql queries). */

@@ -14,7 +14,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.Tpcds.queries ++
       graft.queries.Tpch.queries ++
       graft.queries.Tpch.fusedTwins ++
@@ -45,7 +45,7 @@ object SparkEntry {
       graft.streaming.Streaming.queries ++
       graft.streaming.Streaming.joinQueries
 
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     graft.queries.Tpcds.oracles ++
       graft.queries.Tpch.oracles ++
       graft.queries.Tpch.fusedTwinOracles ++

@@ -84,10 +84,11 @@ object Streaming {
     * partitions × 4 join state stores for 8.8 MB of state, and the 8-core
     * bench ran st04 2.3× FASTER than 32-core (1.32 vs 2.97 s) purely from
     * the lower partition count. Sizing: one partition per 8 MB of staged
-    * input (state for these shapes is O(input window)), floor 1, cap at
-    * the session's cores — a 100 TB/day stream derives hundreds of
-    * partitions and still uses every core, while a kilobyte fixture stops
-    * paying 32-way commit fan-out. Override: SPARK_GRAFT_STREAM_PARTS.
+    * input (state for these shapes is O(input window)), floor
+    * min(4, cores) (see the sweep below), cap at the session's cores — a
+    * 100 TB/day stream derives hundreds of partitions and still uses
+    * every core, while a kilobyte fixture stops paying 32-way commit
+    * fan-out. Override: SPARK_GRAFT_STREAM_PARTS.
     * Safe for result values on every shape here: partitioning never
     * changes what a shuffle computes, and each bench/oracle run starts a
     * fresh query (memory sink, fresh checkpoint), so there is no prior
